@@ -4069,7 +4069,7 @@ def q_detector_attribution(spark, sf_dir):
     signatures from the shingle hashes via the seed-pinned universal-
     hash VALUES, est-Jaccard as the equal-component fraction, the lazy
     exact-LCS short-circuit (evaluated only where 'sa' candidacy met
-    both cheap screens failing, as verify_text_pairs does), text_ok,
+    both cheap screens failing, as the text_verified stage does), text_ok,
     and the per-detector aggregation. Unlike the cluster-closure
     oracles, nothing here trusts the pipeline's pair set: candidacy and
     provenance are re-derived from the kernel tables themselves."""
@@ -4111,15 +4111,12 @@ def q_detector_attribution(spark, sf_dir):
             )
             _ATTR_AUX_DONE.add(key)
 
-    tv = io.read("text_verified")
-    if "detectors_mask" in tv.columns:
-        # round-6 mask-schema commit: decode to the identical detectors
-        # array (same rows as the array-schema commit, test-pinned)
-        from locality_sensitive_hashing_spark.operators.candidates import (
-            decode_mask_col,
-        )
+    from locality_sensitive_hashing_spark.operators.candidates import (
+        decode_mask_col,
+    )
 
-        tv = decode_mask_col(tv, ["minhash", "simhash", "sa"])
+    # the stage commits the int64 detector mask; decode to the array
+    tv = decode_mask_col(io.read("text_verified"))
     one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
     ex = tv.select(
         F.explode("detectors").alias("detector"),
@@ -4140,7 +4137,7 @@ _ATTR_AUX_DONE: set[str] = set()
 
 # detector_attribution oracle: candidacy, provenance, screen, and the
 # per-detector rollup all re-derived relationally (see the query
-# docstring). The per-pair screen mirrors verify_text_pairs exactly:
+# docstring). The per-pair screen mirrors the text_verified stage exactly:
 # est_ok OR ham_ok OR (lazy LCS, computed only for 'sa' pairs failing
 # both cheap tests, as its exact SQL equivalent -- some sa_min_len-gram
 # of t1 occurs in t2).

@@ -169,142 +169,84 @@ def union_candidates(*pair_dfs: DataFrame) -> DataFrame:
     )
 
 
-def detector_bits(names: list[str]) -> dict[str, int]:
-    """The frozen name -> bit assignment of the bitmask union: one bit per
-    detector in sorted-name order."""
-    snames = sorted(set(names))
-    if len(snames) != len(names):
-        raise ValueError(f"duplicate detector names: {names}")
-    return {n: 1 << i for i, n in enumerate(snames)}
+# Frozen detector -> bit assignment of the bitmask union.  Fixed for
+# every run (never derived from a detector subset), so a committed mask
+# always decodes to the same names.
+DETECTOR_BITS = {"minhash": 1, "sa": 2, "simhash": 4}
 
 
-def mask_to_detectors(mask, names: list[str]):
-    """Column: decode a :func:`detector_bits` mask into the detectors
+def mask_to_detectors(mask):
+    """Column: decode a :data:`DETECTOR_BITS` mask into the detectors
     array (sorted-name order == ``array_sort(collect_set(detector))``)."""
-    bit = detector_bits(names)
     return F.array_compact(F.array(*[
         F.when(mask.bitwiseAND(F.lit(b).cast("long")) != 0, F.lit(n))
-        for n, b in sorted(bit.items())
+        for n, b in sorted(DETECTOR_BITS.items())
     ]))
 
 
 def decode_mask_col(
     df: DataFrame,
-    names: list[str],
     mask_col: str = "detectors_mask",
     out_col: str = "detectors",
 ) -> DataFrame:
-    """Replace ``mask_col`` (int64 :func:`detector_bits` mask) with the
+    """Replace ``mask_col`` (int64 :data:`DETECTOR_BITS` mask) with the
     decoded ``out_col`` detectors array IN PLACE (column order preserved).
 
-    The generic read-back decode for any mask-schema stage commit
-    (candidates since round 6; text_verified too -- its 10M-row commit
-    paid the same array<string> encode the candidates stage shed)."""
+    The read-back decode of the mask-schema stage commits (candidates and
+    text_verified)."""
     cols = [
-        mask_to_detectors(F.col(c), names).alias(out_col) if c == mask_col
+        mask_to_detectors(F.col(c)).alias(out_col) if c == mask_col
         else c
         for c in df.columns
     ]
     return df.select(*cols)
 
 
-def decode_detector_mask(df: DataFrame, names: list[str]) -> DataFrame:
-    """(id1, id2, detectors_mask) -> (id1, id2, detectors array<string>):
-    read-back decode of a mask-schema candidates commit (see
-    :func:`union_candidates_bitmask` ``as_mask``)."""
-    return decode_mask_col(
-        df.select("id1", "id2", "detectors_mask"), names
-    )
-
-
 def union_candidates_bitmask(
-    pair_dfs: list[DataFrame],
-    names: list[str],
-    hex_ids: bool = False,
-    as_mask: bool = False,
-    packed_ids: bool = False,
+    pair_dfs: list[DataFrame], names: list[str]
 ) -> DataFrame:
     """:func:`union_candidates` for inputs whose detector tag is KNOWN
-    per input (the pipeline's case: one constant tag per subtree).
+    per input (the pipeline's case: one constant tag per subtree), as
+    (id1, id2, detectors_mask int64).
 
-    Each input contributes one bit; the pair-dedup groupBy then
-    aggregates a primitive ``bit_or`` over int64 masks instead of a
-    ``collect_set`` object buffer -- the partial-aggregation state that
-    rides the one candidate shuffle shrinks to 8 bytes/pair and the
-    ObjectHashAggregate becomes a codegen HashAggregate (measured 10.2 ->
-    7.9 s on the 25M-row bench union).  The detectors array decodes from
-    the mask in sorted-name order, which equals
-    ``array_sort(collect_set(detector))`` exactly (verified row-for-row
-    against the legacy union at bench scale; pinned by
+    Each input contributes its :data:`DETECTOR_BITS` bit; the pair-dedup
+    groupBy then aggregates a primitive ``bit_or`` over int64 masks
+    instead of a ``collect_set`` object buffer -- the partial-aggregation
+    state that rides the one candidate shuffle shrinks to 8 bytes/pair
+    and the ObjectHashAggregate becomes a codegen HashAggregate (measured
+    10.2 -> 7.9 s on the 25M-row bench union).  The pipeline commits the
+    raw mask (array encode off the 10M-row stage write; measured 3.0 ->
+    1.8 s) and decodes on read-back via :func:`decode_mask_col`, which
+    equals ``array_sort(collect_set(detector))`` exactly (pinned by
     tests/test_operators.py::test_union_candidates_bitmask_equals_legacy).
     A ``detector`` column on the inputs is ignored.
 
-    ``hex_ids`` (round 6, guide section 2.3 "shuffle fewer bytes"): when
-    every id is KNOWN to be fixed-width lowercase hex (the pipeline's
-    32-char sha256-prefix text_key), the dedup groupBy keys on the packed
-    ``unhex(id1) || unhex(id2)`` binary -- half the key bytes on the one
-    candidate shuffle and a single-field comparator -- and the ids decode
-    back via ``lower(hex(...))`` after the aggregate (identity on
-    lowercase hex; interleaved A/B at bench scale: ~10% off the union,
-    identical rows).  MUST NOT be set for free-form ids (``unhex`` of a
-    non-hex id is null).
-
-    ``as_mask``: emit ``detectors_mask`` (the raw int64) instead of the
-    decoded ``detectors`` array -- the pipeline commits this form (array
-    encode off the 10M-row stage write; measured 3.0 -> 1.8 s) and
-    decodes on read-back via :func:`decode_detector_mask`.
-
-    ``packed_ids`` (round 6, with ``hex_ids``): the inputs' id1/id2 are
-    ALREADY the unhexed fixed-width binaries (the pipeline unhexes once
-    per blocking-table row upstream), so the dedup key is a plain concat
-    -- the per-emission ``unhex`` pair (2 calls x ~54M emission rows at
-    bench scale, measured ~1.2 s) drops to one call per block row.  The
-    binary ids compare by unsigned bytes, which is order-isomorphic to
-    the lowercase-hex string order (fixed width, nibble-ordered), so the
-    id1 < id2 orientation and every cap decision upstream are unchanged;
-    the decode below emits the identical hex ids (test-pinned).
+    Ids: each input's id1/id2 are the UNHEXED fixed-width binaries of
+    lowercase-hex text_keys (the pipeline unhexes once per blocking-table
+    row upstream), so the dedup key is the plain ``id1 || id2`` concat --
+    half the key bytes of the hex strings on the pipeline's largest
+    shuffle and a single-field comparator.  Binary ids compare by
+    unsigned bytes, which is order-isomorphic to the lowercase-hex
+    string order (fixed width, nibble-ordered), so the id1 < id2
+    orientation and every cap decision upstream are unchanged; the ids
+    decode back to the identical hex strings via ``lower(hex(...))``.
     """
-    bit = detector_bits(names)
-    if hex_ids:
-        if packed_ids:
-            parts = [
-                df.select(
-                    F.concat("id1", "id2").alias("_k"),
-                    F.lit(bit[n]).cast("long").alias("_b"),
-                )
-                for df, n in zip(pair_dfs, names)
-            ]
-        else:
-            parts = [
-                df.select(
-                    F.concat(F.unhex("id1"), F.unhex("id2")).alias("_k"),
-                    F.lit(bit[n]).cast("long").alias("_b"),
-                )
-                for df, n in zip(pair_dfs, names)
-            ]
-    else:
-        parts = [
-            df.select("id1", "id2", F.lit(bit[n]).cast("long").alias("_b"))
-            for df, n in zip(pair_dfs, names)
-        ]
+    parts = [
+        df.select(
+            F.concat("id1", "id2").alias("_k"),
+            F.lit(DETECTOR_BITS[n]).cast("long").alias("_b"),
+        )
+        for df, n in zip(pair_dfs, names)
+    ]
     u = parts[0]
     for d in parts[1:]:
         u = u.unionByName(d)
-    if hex_ids:
-        agg = u.groupBy("_k").agg(F.bit_or("_b").alias("_mask"))
-        half = (F.length("_k") / 2).cast("int")
-        ids = agg.select(
-            F.lower(F.hex(F.substring(F.col("_k"), F.lit(1), half))).alias("id1"),
-            F.lower(F.hex(F.substring(F.col("_k"), half + 1, half))).alias("id2"),
-            "_mask",
-        )
-    else:
-        ids = u.groupBy("id1", "id2").agg(F.bit_or("_b").alias("_mask"))
-    if as_mask:
-        return ids.select("id1", "id2", F.col("_mask").alias("detectors_mask"))
-    return ids.select(
-        "id1", "id2",
-        mask_to_detectors(F.col("_mask"), names).alias("detectors"),
+    agg = u.groupBy("_k").agg(F.bit_or("_b").alias("_mask"))
+    half = (F.length("_k") / 2).cast("int")
+    return agg.select(
+        F.lower(F.hex(F.substring(F.col("_k"), F.lit(1), half))).alias("id1"),
+        F.lower(F.hex(F.substring(F.col("_k"), half + 1, half))).alias("id2"),
+        F.col("_mask").alias("detectors_mask"),
     )
 
 

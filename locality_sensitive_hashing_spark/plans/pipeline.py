@@ -1,17 +1,18 @@
-"""The dedup stage DAG: orchestration, materialization, resume, metrics.
+"""The dedup stage DAG: orchestration, commit boundaries, resume, metrics.
 
-Stage graph (committed tables in CAPS below per DEFAULT_MATERIALIZE;
-lowercase stages are lazy passthroughs fused into their consumer's job;
-SURVEY.md section 3.2, re-architected around content classes --
+One fixed DAG -- the one the numpy reference (``oracle.run_oracle``)
+computes.  Committed tables in CAPS (:data:`COMMITTED_STAGES`);
+lowercase steps are lazy plans fused into their consumer's job
+(SURVEY.md section 3.2, re-architected around content classes --
 operators/textgroup.py):
 
     clips -> KEYED(text_key, audio_key)
     KEYED -> texts (distinct transcripts) -> SIGNATURES(O2-O7)
                                            -> FINGERPRINTS(O12)
-    SIGNATURES -> cand_minhash(O8-O10)   [text pairs]
-    FINGERPRINTS -> cand_simhash(O13-O14)[text pairs]
-    SIGNATURES -> cand_sa(O15)           [text pairs]
-    cand_* -> CANDIDATES(O16) -> text_metrics -> TEXT_VERIFIED(O11, O20)
+    SIGNATURES -> minhash pairs(O8-O10)  [text pairs]
+    FINGERPRINTS -> simhash pairs(O13-O14)[text pairs]
+    SIGNATURES -> sa pairs(O15)          [text pairs]
+    pairs -> CANDIDATES(O16) -> TEXT_VERIFIED(O11, O20)
     KEYED -> AUDIO_CLASSES / chain_edges
       (the audio_classes kernel also emits the frame-energy content
        profile AND the gain-invariant sign-bit fingerprint per distinct
@@ -24,32 +25,30 @@ operators/textgroup.py):
 
 The reference ran its dataflow as GAE MapReduce phases materialized
 through the datastore (REF?mapreduce.yaml, UNVERIFIED -- empty mount);
-here materialization is a PER-STAGE POLICY (``materialize``): only
-resume-valuable boundaries commit to TableIO (Iceberg or
-parquet+manifest); the rest stay lazy and fuse into the next committed
-stage's job.
+here only the 8 resume-valuable boundaries commit to TableIO (Iceberg or
+parquet+manifest), and everything else fuses into the next commit's job.
 
 - **Resume** (O26, BASELINE.json "resumable from the last committed
   snapshot/checkpoint"): a committed stage whose (table, config_id)
-  snapshot exists is skipped and read back; a passthrough stage simply
-  rebuilds from its (committed) inputs -- same results either way.
+  snapshot exists is skipped and read back; lazy steps simply rebuild
+  from their (committed) inputs -- same results either way.
 - **Lineage/metrics** (O23): per-partition row counts + wall-clock per
   committed stage append to the ``metrics`` table; capped-out
-  buckets/groups land in ``dropped_buckets`` / ``dropped_groups`` --
-  bounded explosion is loud, never silent (O25).
+  buckets/groups land in ``dropped_buckets`` / ``dropped_energy_buckets``
+  / ``dropped_fp_buckets`` / ``dropped_groups`` -- bounded explosion is
+  loud, never silent (O25).
 - **Why not commit everything** (round-1 lesson): 14 serial stage
   commits each pay write + read-back + scheduler round-trips that do NOT
   shrink with parallelism -- that fixed floor capped 8->32 scaling
-  efficiency at 0.44 (BENCH/SCALING notes). The default policy commits 8
-  boundaries; cheap derivations (``texts``, ``chain_edges``) and the
-  three detector pair-sets fuse into their consumer's job, where Spark's
-  DAG scheduler runs the independent detector subtrees concurrently
-  WITHIN the one ``candidates`` job -- thread-level concurrency is only
-  needed across the audio/text branches.
+  efficiency at 0.44 (BENCH/SCALING notes).  ``texts``, ``chain_edges``
+  and the three detector pair-sets fuse into their consumer's job, where
+  Spark's DAG scheduler runs the independent detector subtrees
+  concurrently WITHIN the one ``candidates`` job -- thread-level
+  concurrency is only needed across the audio/text branches.
 - **Plan hygiene at scale**: every shuffle-heavy lineage still ends at a
-  materialization point (signatures, candidates, verified), so a
-  10^12-row run never re-executes upstream shuffles on failure and AQE
-  re-plans each committed stage with fresh statistics.
+  commit (signatures, candidates, verified), so a 10^12-row run never
+  re-executes upstream shuffles on failure and AQE re-plans each
+  committed stage with fresh statistics.
 
 Scale accounting (10^12 clips): every stage is linear in its input except
 the three blocked self-joins, whose per-key fan-out is bounded by
@@ -60,7 +59,6 @@ factor.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -70,7 +68,6 @@ from pyspark.sql import functions as F
 from locality_sensitive_hashing_spark.config import Config
 from locality_sensitive_hashing_spark.metrics import partition_lineage
 from locality_sensitive_hashing_spark.operators.candidates import (
-    decode_detector_mask,
     decode_mask_col,
     dropped_blocks,
     pairs_from_blocks,
@@ -97,34 +94,30 @@ from locality_sensitive_hashing_spark.operators.textgroup import (
 )
 from locality_sensitive_hashing_spark.operators.verify import (
     expand_and_verify,
-    text_pair_metrics,
     text_verified_fused,
     text_verified_lookup,
-    verify_text_pairs,
 )
 from locality_sensitive_hashing_spark.sources.tables import TableIO
 
 
-# resume-valuable commit boundaries (see module docstring for why the
-# other six stages pass through lazily by default)
-DEFAULT_MATERIALIZE = frozenset({
+# the resume-valuable commit boundaries (see module docstring for why
+# the other steps stay lazy)
+COMMITTED_STAGES = frozenset({
     "keyed", "audio_classes", "signatures", "fingerprints",
     "candidates", "text_verified", "verified", "clusters",
 })
 
-ALL_STAGES = frozenset(DEFAULT_MATERIALIZE | {
-    "texts", "chain_edges", "cand_minhash", "cand_simhash", "cand_sa",
-    "text_metrics",
-})
+# On-disk size gate of the worker-side text lookup kernel: worker RSS for
+# the feature store is ~5x the committed signatures + fingerprints bytes
+# (sig matrix + norms + memoized gram arrays), so 256 MiB bounds a worker
+# at ~1.3 GiB.
+TEXT_LOOKUP_MAX_BYTES = 256 << 20
 
 
 class DedupPipeline:
-    """Runs the full near-duplicate pipeline over a clips DataFrame.
-
-    ``materialize``: stage names to commit to TableIO ("all" for every
-    stage -- the round-1 behavior, useful for stage-level debugging);
-    non-listed stages stay lazy and fuse into downstream jobs.
-    """
+    """Runs the near-duplicate DAG over a clips DataFrame, committing the
+    :data:`COMMITTED_STAGES` boundaries to ``io`` under
+    ``cfg.config_id``."""
 
     def __init__(
         self,
@@ -132,46 +125,27 @@ class DedupPipeline:
         cfg: Config,
         io: TableIO,
         run_id: str | None = None,
-        detectors: tuple[str, ...] = (
-            "minhash", "simhash", "sa", "energy", "fingerprint"
-        ),
-        materialize: frozenset[str] | str | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
         self.io = io
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.detectors = detectors
-        if materialize is None:
-            materialize = DEFAULT_MATERIALIZE
-        elif materialize == "all":
-            materialize = ALL_STAGES
-        self.materialize = frozenset(materialize)
-        unknown = self.materialize - ALL_STAGES
-        if unknown:
-            # a typo here would silently disable the resume point
-            raise ValueError(
-                f"unknown materialize stage(s) {sorted(unknown)}; "
-                f"valid: {sorted(ALL_STAGES)}"
-            )
         self.executed_stages: list[str] = []
         self.skipped_stages: list[str] = []
-        self.passthrough_stages: list[str] = []
-        # driver-side walls that run OUTSIDE stage commits (cache
-        # materialization, async-metrics drain): bench.py merges these
-        # into its per-stage report so no wall-clock is unattributed
+        # driver-side walls that run OUTSIDE stage commits (async-metrics
+        # drain): bench.py merges these into its per-stage report so no
+        # wall-clock is unattributed
         self.aux_walls: dict[str, float] = {}
         self._metrics_futures: list = []
         self._metrics_pool = None
 
     # -- stage runner -------------------------------------------------------
+    def _advisory(self, fn) -> None:
+        """Run ``fn`` on the async metrics pool (drained by ``run``)."""
+        self._metrics_futures.append(self._metrics_pool.submit(fn))
+
     def _stage(self, name: str, build) -> DataFrame:
         cid = self.cfg.config_id
-        if name not in self.materialize:
-            # passthrough: no commit, no job -- the plan fuses into the
-            # next materialized downstream stage
-            self.passthrough_stages.append(name)
-            return build()
         if self.io.committed(name, cid):
             self.skipped_stages.append(name)
             return self.io.read(name)
@@ -184,17 +158,11 @@ class DedupPipeline:
         # lineage/metrics are advisory (the data commit above is the
         # correctness event), so the extra scan+append runs asynchronously
         # instead of serializing every stage boundary
-        def emit():
-            self.io.append(
-                partition_lineage(self.spark, out, self.run_id, cid, name, wall),
-                "metrics",
-                cid,
-            )
-
-        if self._metrics_pool is not None:
-            self._metrics_futures.append(self._metrics_pool.submit(emit))
-        else:
-            emit()
+        self._advisory(lambda: self.io.append(
+            partition_lineage(self.spark, out, self.run_id, cid, name, wall),
+            "metrics",
+            cid,
+        ))
         self.executed_stages.append(name)
         return out
 
@@ -204,11 +172,8 @@ class DedupPipeline:
         Conditions: parquet-backed store (workers read the stage files
         directly; an Iceberg store hides files behind the catalog),
         signatures + fingerprints committed, and their combined on-disk
-        size under the gate -- worker RSS for the store is ~5x the disk
-        bytes (sig matrix + norms + memoized gram arrays), so the default
-        256 MiB gate bounds a worker at ~1.3 GiB.  Tunable via
-        SPARK_LSH_TEXT_LOOKUP_MAX_BYTES (0 disables the lookup path);
-        execution-only: both paths emit bit-identical rows (test-pinned).
+        size at most :data:`TEXT_LOOKUP_MAX_BYTES`.  Execution-only: the
+        lookup and fused paths emit bit-identical rows (test-pinned).
         """
         cid = self.cfg.config_id
         if not (
@@ -220,13 +185,9 @@ class DedupPipeline:
         fp_dir = self.io.data_path("fingerprints")
         if sig_dir is None or fp_dir is None:
             return None
-        cap = int(os.environ.get(
-            "SPARK_LSH_TEXT_LOOKUP_MAX_BYTES", str(256 << 20)))
-        if cap <= 0:
-            return None
         total = self.io.data_bytes("signatures") + self.io.data_bytes(
             "fingerprints")
-        if total > cap:
+        if total > TEXT_LOOKUP_MAX_BYTES:
             return None
         return sig_dir, fp_dir
 
@@ -234,10 +195,10 @@ class DedupPipeline:
     def run(self, clips: DataFrame) -> DataFrame:
         """Execute the DAG; independent branches run CONCURRENTLY.
 
-        The audio branch (audio_classes, chain_edges) shares no input
-        with the text branch, and the three detectors are mutually
-        independent, so they are submitted from worker threads (Spark
-        sessions are thread-safe; session.py enables FAIR scheduling).
+        The audio branch (audio_classes) shares no input with the text
+        branch (signatures, fingerprints), so those three commits are
+        submitted from worker threads (Spark sessions are thread-safe;
+        session.py enables FAIR scheduling).
         On a real cluster this keeps executors saturated across stage
         boundaries; in local mode it overlaps UDF compute with shuffle
         I/O. Stage commits stay atomic (TableIO holds a manifest lock).
@@ -266,11 +227,11 @@ class DedupPipeline:
             self.io.write(dropped_groups(cl, cfg), "dropped_groups", cfg.config_id)
             return cl
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             # audio branch in parallel with the whole text branch
             f_classes = pool.submit(self._stage, "audio_classes", build_classes)
 
-            texts = self._stage("texts", lambda: distinct_texts(keyed))
+            texts = distinct_texts(keyed)
             f_sigs = pool.submit(
                 self._stage,
                 "signatures",
@@ -287,169 +248,79 @@ class DedupPipeline:
             signatures = f_sigs.result()
             fingerprints = f_fps.result()
 
-            # Binary pair ids through the detector subtrees (round 6):
-            # text_key is fixed-width lowercase hex, so unhex ONCE per
-            # blocking-table row here and let every downstream pair
-            # emission, join, broadcast and the union's dedup key carry
-            # the 16-byte binary instead of the 32-char string -- the
-            # per-emission unhex pair (~54M emissions at bench scale)
-            # drops to one call per block row and the subtree broadcast
-            # relations shrink ~40%.  Binary unsigned-byte order ==
-            # lowercase-hex string order (fixed width), so id1 < id2 and
-            # all cap decisions are unchanged; the union decodes the
-            # identical hex ids (test-pinned).  Only when the subtree
-            # stages stay passthrough: a materialize="all" debug run
-            # keeps the legacy string-id stage commits.
-            packed = not ({"cand_minhash", "cand_simhash", "cand_sa"}
-                          & self.materialize)
-            sigs_cand = (
-                signatures.withColumn("text_key", F.unhex("text_key"))
-                if packed else signatures
-            )
-            fps_cand = (
-                fingerprints.withColumn("text_key", F.unhex("text_key"))
-                if packed else fingerprints
-            )
-
-            def build_minhash():
-                buckets = explode_bands(sigs_cand, id_col="text_key")
-                # dedup=False: union_candidates' groupBy dedups with one
-                # shuffle for all detectors (map-side combine collapses
-                # the per-bucket duplicates before they ship)
-                return pairs_from_blocks(
-                    buckets, ["band_id", "band_hash"], cfg.bucket_cap,
+            # Binary pair ids through the detector subtrees: text_key is
+            # fixed-width lowercase hex, so unhex ONCE per blocking-table
+            # row here and let every downstream pair emission, join,
+            # broadcast and the union's dedup key carry the 16-byte binary
+            # instead of the 32-char string -- the per-emission unhex pair
+            # (~54M emissions at bench scale) drops to one call per block
+            # row and the subtree broadcast relations shrink ~40%.  Binary
+            # unsigned-byte order == lowercase-hex string order (fixed
+            # width), so id1 < id2 and all cap decisions are unchanged;
+            # the union decodes the identical hex ids (test-pinned).
+            sigs_cand = signatures.withColumn("text_key", F.unhex("text_key"))
+            fps_cand = fingerprints.withColumn("text_key", F.unhex("text_key"))
+            # the three detector pair-sets are lazy plans (built here,
+            # while audio_classes still runs) that all execute INSIDE the
+            # one `candidates` commit, where the DAG scheduler runs the
+            # independent subtrees concurrently.  dedup=False: the union's
+            # groupBy dedups with one shuffle for all detectors (map-side
+            # combine collapses the per-bucket duplicates before they ship).
+            cand_parts = [
+                pairs_from_blocks(
+                    explode_bands(sigs_cand, id_col="text_key"),
+                    ["band_id", "band_hash"], cfg.bucket_cap,
                     "minhash", id_col="text_key", dedup=False,
-                )
-
-            # detector pair-sets: passthrough by default, so these return
-            # lazy plans that all execute INSIDE the one `candidates`
-            # commit, where the DAG scheduler runs the three independent
-            # subtrees concurrently. (pool.submit still parallelizes the
-            # materialize="all" debugging mode.)
-            futures = []
-            cand_names: list[str] = []
-            if "minhash" in self.detectors:
-                futures.append(pool.submit(self._stage, "cand_minhash", build_minhash))
-                cand_names.append("minhash")
-            if "simhash" in self.detectors:
-                futures.append(
-                    pool.submit(
-                        self._stage,
-                        "cand_simhash",
-                        lambda: simhash_candidates(
-                            fps_cand, cfg, id_col="text_key", dedup=False
-                        ),
-                    )
-                )
-                cand_names.append("simhash")
-            if "sa" in self.detectors:
-                futures.append(
-                    pool.submit(
-                        self._stage,
-                        "cand_sa",
-                        lambda: sa_anchor_pairs(
-                            sigs_cand, cfg, id_col="text_key", dedup=False
-                        ),
-                    )
-                )
-                cand_names.append("sa")
-            cand_parts = [f.result() for f in futures]
+                ),
+                simhash_candidates(fps_cand, cfg, id_col="text_key", dedup=False),
+                sa_anchor_pairs(sigs_cand, cfg, id_col="text_key", dedup=False),
+            ]
             classes = f_classes.result()
 
-        chains = self._stage("chain_edges", lambda: chain_edges(keyed))
-        # one constant detector tag per subtree -> the pair-dedup groupBy
-        # aggregates a primitive bitmask instead of a collect_set buffer
-        # (operators/candidates.union_candidates_bitmask; same rows).
-        # Round 6 commit shape: the dedup keys on the packed
-        # unhex(id1)||unhex(id2) binary (text_keys are fixed-width hex --
-        # half the key bytes on the pipeline's largest shuffle) and the
-        # stage table stores the raw int64 mask instead of the decoded
-        # array (array encode off the 10M-row write); the read-back
-        # decodes to the identical detectors array below, so every
-        # downstream consumer and the resume path see the same rows.
-        cand_raw = self._stage(
+        chains = chain_edges(keyed)
+        # one constant detector bit per subtree -> the pair-dedup groupBy
+        # aggregates a primitive bitmask on the packed binary pair key,
+        # and the stage table stores the raw int64 mask
+        # (operators/candidates.union_candidates_bitmask).
+        candidates = self._stage(
             "candidates",
             lambda: union_candidates_bitmask(
-                cand_parts, cand_names, hex_ids=True, as_mask=True,
-                packed_ids=packed,
+                cand_parts, ["minhash", "simhash", "sa"]
             ),
         )
-        # mask-schema commits stay mask-form through the one-pass text
-        # verify (its commit then stores the mask too -- round 6: the
-        # array<string> encode cost ~2 s of the 10M-row stage write);
-        # the decoded array form feeds the debug/two-stage path only.
-        has_mask = "detectors_mask" in cand_raw.columns
-        candidates = (
-            decode_detector_mask(cand_raw, cand_names) if has_mask
-            else cand_raw
-        )
-        # -- text verification (round 6: one-pass forms) ------------------
-        # When text_metrics stays a passthrough (the default), the metrics
-        # + lazy-LCS + text_ok derivation runs as ONE job instead of the
-        # old persist-metrics / second-pass / left-join-back shape
-        # (bit-identical rows; equality + parity test-pinned).  Strategy
-        # is size-adaptive, mirroring guide sections 3.1/8: when the
-        # committed per-text feature tables are small enough for worker
+        # -- text verification: metrics + lazy LCS + text_ok in ONE job,
+        # mask in, mask out.  Size-adaptive, mirroring guide sections
+        # 3.1/8: when the committed per-text feature tables fit worker
         # memory, the pairs cross the Python boundary as (id1, id2, flag)
         # ONLY and every feature comes from a worker-side store read
         # straight from the stage commit (text_verified_lookup, zero
-        # joins); past the size gate the features ride the bucketed joins
-        # (text_verified_fused, scales like the old path).  The
-        # materialized-text_metrics debug mode keeps the original
-        # two-stage derivation.
-        text_metrics = self._stage(
-            "text_metrics",
-            lambda: text_pair_metrics(candidates, signatures, fingerprints),
-        )
-        if "text_metrics" not in self.materialize:
-            cand_in = cand_raw if has_mask else candidates
-            lookup_dirs = self._text_lookup_dirs()
-            if lookup_dirs is not None:
-                builder = lambda: text_verified_lookup(  # noqa: E731
-                    cand_in, *lookup_dirs, cfg, names=cand_names
-                )
-            else:
-                builder = lambda: text_verified_fused(  # noqa: E731
-                    cand_in, signatures, fingerprints, cfg, names=cand_names
-                )
-            text_verified = self._stage("text_verified", builder)
-            if "detectors_mask" in text_verified.columns:
-                text_verified = decode_mask_col(text_verified, cand_names)
-        else:
-            # debug mode (materialize="all"): committed metrics table +
-            # the original two-stage derivation over it
-            text_verified = self._stage(
-                "text_verified",
-                lambda: verify_text_pairs(text_metrics, signatures, cfg),
+        # joins); otherwise the features ride the bucketed joins
+        # (text_verified_fused).  Bit-identical rows either way.
+        lookup_dirs = self._text_lookup_dirs()
+        if lookup_dirs is not None:
+            builder = lambda: text_verified_lookup(  # noqa: E731
+                candidates, *lookup_dirs, cfg
             )
-        energy = "energy" in self.detectors
-        fingerprint = "fingerprint" in self.detectors
+        else:
+            builder = lambda: text_verified_fused(  # noqa: E731
+                candidates, signatures, fingerprints, cfg
+            )
+        text_verified = decode_mask_col(self._stage("text_verified", builder))
         verified = self._stage(
             "verified",
-            lambda: expand_and_verify(
-                text_verified, classes, chains, clips, cfg,
-                energy=energy, fingerprint=fingerprint,
-            ),
+            lambda: expand_and_verify(text_verified, classes, chains, clips, cfg),
         )
         # -- advisory loud-drop logs (O25): over-cap buckets across all
-        # three capped detector axes are counted, never silent.  Keyed on
+        # three capped blocking axes are counted, never silent.  Keyed on
         # each log's OWN commit status (not its stage's): a crash between
         # the stage commit and the log re-emits on resume.  The writes are
         # ADVISORY (like stage metrics), so they run on the async metrics
         # pool, SUBMITTED HERE -- after the verified commit, right before
         # the CC stage -- so the extra banding/blocking scans overlap the
         # iterative clusters stage's idle cores instead of contending with
-        # the candidates/verified jobs (round 6, guide section 2.6);
-        # run() drains the futures before returning.
-        def submit_advisory(fn):
-            if self._metrics_pool is not None:
-                self._metrics_futures.append(self._metrics_pool.submit(fn))
-            else:
-                fn()
-
-        if "minhash" in self.detectors and not self.io.committed(
-            "dropped_buckets", cfg.config_id
-        ):
+        # the candidates/verified jobs (guide section 2.6); run() drains
+        # the futures before returning.
+        if not self.io.committed("dropped_buckets", cfg.config_id):
             def emit_dropped():
                 self.io.write(
                     dropped_blocks(
@@ -461,10 +332,8 @@ class DedupPipeline:
                     cfg.config_id,
                 )
 
-            submit_advisory(emit_dropped)
-        if energy and not self.io.committed(
-            "dropped_energy_buckets", cfg.config_id
-        ):
+            self._advisory(emit_dropped)
+        if not self.io.committed("dropped_energy_buckets", cfg.config_id):
             def emit_dropped_energy():
                 from locality_sensitive_hashing_spark.operators.audio_lsh import (
                     explode_energy_bands,
@@ -483,10 +352,8 @@ class DedupPipeline:
                     cfg.config_id,
                 )
 
-            submit_advisory(emit_dropped_energy)
-        if fingerprint and not self.io.committed(
-            "dropped_fp_buckets", cfg.config_id
-        ):
+            self._advisory(emit_dropped_energy)
+        if not self.io.committed("dropped_fp_buckets", cfg.config_id):
             def emit_dropped_fp():
                 from locality_sensitive_hashing_spark.operators.audio_fingerprint import (
                     fingerprint_blocks,
@@ -505,7 +372,7 @@ class DedupPipeline:
                     cfg.config_id,
                 )
 
-            submit_advisory(emit_dropped_fp)
+            self._advisory(emit_dropped_fp)
         clusters = self._stage(
             "clusters",
             lambda: connected_components(

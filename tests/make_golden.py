@@ -25,6 +25,13 @@ N_ROWS = 200
 SEED = 42
 
 
+def _listed(df):
+    """Copy of ``df`` with the detectors column as plain lists."""
+    out = df.copy()
+    out["detectors"] = out["detectors"].map(list)
+    return out
+
+
 def main() -> None:
     os.makedirs(GOLDEN_DIR, exist_ok=True)
     clips, planted = make_clips(N_ROWS, seed=SEED)
@@ -33,12 +40,8 @@ def main() -> None:
         "expected_signatures": res.signatures,
         "expected_buckets": res.buckets,
         "expected_simhash": res.simhash,
-        "expected_candidates": res.candidates.assign(
-            detectors=res.candidates.detectors.map(list)
-        ),
-        "expected_verified": res.verified.assign(
-            detectors=res.verified.detectors.map(list)
-        ),
+        "expected_candidates": _listed(res.candidates),
+        "expected_verified": _listed(res.verified),
         "expected_clusters": res.clusters,
         "planted_pairs": planted,
     }

@@ -18,7 +18,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from locality_sensitive_hashing_spark.config import DEFAULT_CONFIG
 from locality_sensitive_hashing_spark.fixtures import make_clips
+from locality_sensitive_hashing_spark.oracle import run_oracle
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or os.path.join(
@@ -65,6 +67,14 @@ def test_dedup_job_spark_submit_and_resume(tmp_path):
     assert out["n_rows"] == len(clips)
     assert out["executed_stages"] and not out["skipped_stages"]
     assert os.path.isdir(os.path.join(wd, "clusters"))
+
+    # the shipped job runs the reference DAG: every clip's committed
+    # cluster equals the numpy oracle's (the corpus plants a gain pair
+    # only the fingerprint detector can pair)
+    got = pq.read_table(os.path.join(wd, "clusters")).to_pandas()
+    exp = run_oracle(clips, DEFAULT_CONFIG).clusters
+    assert dict(zip(got.clip_id, got.cluster_id)) == dict(
+        zip(exp.clip_id, exp.cluster_id))
 
     # resume ACROSS spark-submit processes: a rerun on the same workdir
     # skips every committed stage and reports identical row count

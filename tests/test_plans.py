@@ -75,7 +75,7 @@ def test_bucketed_signatures_join_without_exchange(spark, pipeline_run, cfg):
 
 
 def test_bucketed_feature_prejoin_no_exchange(spark, pipeline_run, cfg):
-    """text_pair_metrics pre-joins signatures+fingerprints into one
+    """text_verified_fused pre-joins signatures+fingerprints into one
     per-text feature table; both commit bucketed+sorted by text_key with
     the same bucket count, so that join is a co-partitioned SMJ with ZERO
     exchanges (forced to SMJ by disabling broadcast for the check)."""
@@ -136,34 +136,6 @@ def test_text_exprs_stay_jvm_side(spark, clips_parquet):
     plan = _plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "codegen id" in plan  # scan-side codegen intact
-
-
-def test_pair_metrics_single_arrow_hop_hamming_jvm(spark):
-    """Round-3 hot-path shape: text_pair_metrics computes est_jaccard in
-    exactly ONE ArrowEvalPython node (the batched (B,H) compare) while
-    the Hamming distance stays JVM-side bit_count in the same Project --
-    no BatchEvalPython (row-at-a-time Python) anywhere."""
-    from locality_sensitive_hashing_spark.operators.verify import (
-        text_pair_metrics,
-    )
-
-    sigs = spark.createDataFrame(
-        pd.DataFrame({"text_key": ["a", "b"], "sig": [[1] * 8, [2] * 8]})
-    )
-    fps = spark.createDataFrame(
-        pd.DataFrame({"text_key": ["a", "b"], "fingerprint": [1, 2]})
-    )
-    cands = spark.createDataFrame(
-        pd.DataFrame({"id1": ["a"], "id2": ["b"], "detectors": [["mh"]]})
-    )
-    import re
-
-    plan = _plan(text_pair_metrics(cands, sigs, fps))
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
-    assert "BatchEvalPython" not in plan, plan
-    assert "bit_count" in plan, plan  # hamming stayed JVM
-    # the interpreted HOF fold is gone from the hot path
-    assert "aggregate(" not in plan and "zip_with" not in plan, plan
 
 
 def test_pq_scoring_path_is_jvm_with_broadcast_model(spark):

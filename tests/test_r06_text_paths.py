@@ -1,10 +1,9 @@
-"""Round-6 one-pass text verification: path equality + plan shape.
+"""One-pass text verification: path equality + plan shape.
 
-The pipeline now derives text_verified in ONE job via either the
-worker-side lookup kernel (small feature tables) or the fused join form
-(scale fallback); the original two-stage persist-metrics derivation
-remains the materialized-text_metrics debug path.  All three must emit
-BIT-IDENTICAL rows -- est float-bit equality included -- and the lookup
+The pipeline derives text_verified in ONE job via either the worker-side
+lookup kernel (small feature tables) or the fused join form (past the
+size gate).  Both must emit BIT-IDENTICAL rows -- est float-bit equality
+included -- equal to the numpy oracle's text_verified, and the lookup
 plan must stay join- and exchange-free with exactly one Python crossing.
 """
 
@@ -14,84 +13,74 @@ import numpy as np
 import pytest
 
 from locality_sensitive_hashing_spark.operators.candidates import (
-    decode_detector_mask,
+    decode_mask_col,
 )
 from locality_sensitive_hashing_spark.operators.verify import (
-    text_pair_metrics,
     text_verified_fused,
     text_verified_lookup,
-    verify_text_pairs,
 )
 
 COLS = ["tk1", "tk2", "detectors", "est_jaccard", "hamming", "lcs", "text_ok"]
-CAND_NAMES = ["minhash", "simhash", "sa"]
 
 
-def _read_candidates(io):
-    # round 6: the committed stage stores the raw bitmask; decode exactly
-    # as the pipeline does on read-back
-    return decode_detector_mask(io.read("candidates"), CAND_NAMES)
-
-
-def _frame(df):
-    pdf = df.toPandas()
+def _frame(pdf):
+    pdf = pdf.copy()
     pdf["detectors"] = pdf["detectors"].map(tuple)
     return pdf.sort_values(["tk1", "tk2"]).reset_index(drop=True)[COLS]
 
 
 @pytest.fixture(scope="module")
-def three_paths(spark, pipeline_run, cfg):
+def text_paths(spark, pipeline_run, cfg, corpus):
+    """(lookup, fused, oracle) text_verified frames over the committed
+    mask-schema candidates."""
     io, _, _ = pipeline_run
-    cands = _read_candidates(io)
-    sigs = io.read("signatures")
-    fps = io.read("fingerprints")
-    lookup = _frame(text_verified_lookup(
-        cands, io.data_path("signatures"), io.data_path("fingerprints"), cfg))
-    fused = _frame(text_verified_fused(cands, sigs, fps, cfg))
-    tm = text_pair_metrics(cands, sigs, fps).persist()
-    tm.count()
-    legacy = _frame(verify_text_pairs(tm, sigs, cfg))
-    tm.unpersist()
-    return lookup, fused, legacy
+    cands = io.read("candidates")
+    sig_dir = io.data_path("signatures")
+    fp_dir = io.data_path("fingerprints")
+    lookup = text_verified_lookup(cands, sig_dir, fp_dir, cfg)
+    fused = text_verified_fused(
+        cands, io.read("signatures"), io.read("fingerprints"), cfg)
+    assert "detectors_mask" in lookup.columns  # the commit-form schema
+    assert "detectors_mask" in fused.columns
+    _, _, oracle = corpus
+    return (
+        _frame(decode_mask_col(lookup).toPandas()),
+        _frame(decode_mask_col(fused).toPandas()),
+        _frame(oracle.text_verified),
+    )
 
 
-def test_lookup_path_equals_legacy(three_paths):
-    lookup, _, legacy = three_paths
-    assert len(lookup) == len(legacy)
+def _assert_same_rows(got, exp):
+    assert len(got) == len(exp)
     for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(lookup[c]) == list(legacy[c]), f"{c} mismatch"
+        assert list(got[c]) == list(exp[c]), f"{c} mismatch"
     # float BIT equality, not approximate: same (B, H) numpy compare
     assert (
-        lookup.est_jaccard.to_numpy().view(np.int64)
-        == legacy.est_jaccard.to_numpy().view(np.int64)
+        got.est_jaccard.to_numpy().view(np.int64)
+        == exp.est_jaccard.to_numpy().view(np.int64)
     ).all()
 
 
-def test_fused_path_equals_legacy(three_paths):
-    _, fused, legacy = three_paths
-    assert len(fused) == len(legacy)
-    for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(fused[c]) == list(legacy[c]), f"{c} mismatch"
-    assert (
-        fused.est_jaccard.to_numpy().view(np.int64)
-        == legacy.est_jaccard.to_numpy().view(np.int64)
-    ).all()
+def test_lookup_path_equals_fused(text_paths):
+    lookup, fused, _ = text_paths
+    _assert_same_rows(lookup, fused)
 
 
-def test_committed_stage_used_lookup_or_fused(pipeline_run):
-    """The default pipeline run derives text_verified without the
-    metrics persist: text_metrics stays a passthrough and no
-    text_metrics_cache aux wall is recorded."""
-    _, pipe, _ = pipeline_run
-    assert "text_metrics" in pipe.passthrough_stages
-    assert "text_metrics_cache" not in pipe.aux_walls
+def test_lookup_path_equals_oracle(text_paths):
+    lookup, _, oracle = text_paths
+    _assert_same_rows(lookup, oracle)
+
+
+def test_fused_path_equals_oracle(text_paths):
+    _, fused, oracle = text_paths
+    _assert_same_rows(fused, oracle)
 
 
 def test_lookup_plan_zero_joins_one_python_crossing(spark, pipeline_run, cfg):
     io, _, _ = pipeline_run
-    cands = _read_candidates(io)
     plan = text_verified_lookup(
-        cands, io.data_path("signatures"), io.data_path("fingerprints"), cfg
+        io.read("candidates"), io.data_path("signatures"),
+        io.data_path("fingerprints"), cfg,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "Exchange" not in plan
@@ -99,54 +88,12 @@ def test_lookup_plan_zero_joins_one_python_crossing(spark, pipeline_run, cfg):
     assert "BatchEvalPython" not in plan
 
 
-def test_lookup_gate_falls_back_on_size(spark, pipeline_run, cfg,
-                                        monkeypatch):
-    """SPARK_LSH_TEXT_LOOKUP_MAX_BYTES=0 disables the lookup path; the
-    pipeline then plans the fused join form (still one-pass)."""
+def test_lookup_gate_falls_back_on_size(spark, pipeline_run, monkeypatch):
+    """Feature tables above TEXT_LOOKUP_MAX_BYTES plan the fused join
+    form (still one-pass)."""
     import locality_sensitive_hashing_spark.plans.pipeline as P
 
-    io, pipe, _ = pipeline_run
-    monkeypatch.setenv("SPARK_LSH_TEXT_LOOKUP_MAX_BYTES", "0")
-    assert pipe._text_lookup_dirs() is None
-    monkeypatch.delenv("SPARK_LSH_TEXT_LOOKUP_MAX_BYTES")
+    _, pipe, _ = pipeline_run
     assert pipe._text_lookup_dirs() is not None
-
-
-def test_mask_schema_commit_decodes_to_identical_rows(spark, pipeline_run,
-                                                      cfg):
-    """Round 6: mask-form candidates in -> mask-form text_verified out
-    (the commit sheds the 10M-row array<string> encode); decoding the
-    mask yields BIT-IDENTICAL rows to the array path, lookup and fused
-    alike."""
-    from locality_sensitive_hashing_spark.operators.candidates import (
-        decode_mask_col,
-    )
-
-    io, _, _ = pipeline_run
-    cand_raw = io.read("candidates")
-    if "detectors_mask" not in cand_raw.columns:
-        pytest.skip("pre-mask candidates commit")
-    cands = _read_candidates(io)
-    sigs, fps = io.read("signatures"), io.read("fingerprints")
-    sig_dir = io.data_path("signatures")
-    fp_dir = io.data_path("fingerprints")
-
-    arr = _frame(text_verified_lookup(cands, sig_dir, fp_dir, cfg))
-    masked = text_verified_lookup(
-        cand_raw, sig_dir, fp_dir, cfg, names=CAND_NAMES)
-    assert "detectors_mask" in masked.columns  # the commit-form schema
-    got = _frame(decode_mask_col(masked, CAND_NAMES))
-    assert list(got.columns) == list(arr.columns)
-    for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(got[c]) == list(arr[c]), f"{c} mismatch (lookup)"
-    assert (got.est_jaccard.to_numpy().view(np.int64)
-            == arr.est_jaccard.to_numpy().view(np.int64)).all()
-
-    arr_f = _frame(text_verified_fused(cands, sigs, fps, cfg))
-    got_f = _frame(decode_mask_col(
-        text_verified_fused(cand_raw, sigs, fps, cfg, names=CAND_NAMES),
-        CAND_NAMES))
-    for c in ("tk1", "tk2", "detectors", "hamming", "lcs", "text_ok"):
-        assert list(got_f[c]) == list(arr_f[c]), f"{c} mismatch (fused)"
-    assert (got_f.est_jaccard.to_numpy().view(np.int64)
-            == arr_f.est_jaccard.to_numpy().view(np.int64)).all()
+    monkeypatch.setattr(P, "TEXT_LOOKUP_MAX_BYTES", 0)
+    assert pipe._text_lookup_dirs() is None

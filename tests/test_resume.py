@@ -14,40 +14,13 @@ from locality_sensitive_hashing_spark.sources.tables import TableIO
 
 
 def test_default_policy_commits_eight_stages(pipeline_run):
-    """Materialization is a per-stage policy: only resume-valuable
-    boundaries commit; the rest fuse into downstream jobs (the round-1
-    14-commit serial floor is gone)."""
-    from locality_sensitive_hashing_spark.plans.pipeline import DEFAULT_MATERIALIZE
+    """Only the resume-valuable boundaries commit; the rest fuse into
+    downstream jobs (the round-1 14-commit serial floor is gone)."""
+    from locality_sensitive_hashing_spark.plans.pipeline import COMMITTED_STAGES
 
     _io, pipe, _ = pipeline_run
-    assert set(pipe.executed_stages) == set(DEFAULT_MATERIALIZE)
-    assert len(DEFAULT_MATERIALIZE) == 8
-    assert {"texts", "chain_edges", "text_metrics"} <= set(pipe.passthrough_stages)
-
-
-def test_materialize_all_same_clusters(spark, cfg, clips_df, pipeline_run):
-    """The debugging policy (commit every stage) is result-identical."""
-    tmp = tempfile.mkdtemp(prefix="lsh_matall_")
-    try:
-        io = TableIO(spark, tmp)
-        pipe = DedupPipeline(spark, cfg, io, run_id="matall", materialize="all")
-        clusters = pipe.run(clips_df)
-        assert "cand_minhash" in pipe.executed_stages
-        assert pipe.passthrough_stages == []
-        _, _, clusters1 = pipeline_run
-        a = clusters1.toPandas().sort_values("clip_id").reset_index(drop=True)
-        b = clusters.toPandas().sort_values("clip_id").reset_index(drop=True)
-        assert a.equals(b)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_unknown_materialize_stage_rejected(spark, cfg, clips_df):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown materialize stage"):
-        DedupPipeline(spark, cfg, TableIO(spark, tempfile.mkdtemp()),
-                      materialize=frozenset({"signatures", "cluster"}))
+    assert set(pipe.executed_stages) == set(COMMITTED_STAGES)
+    assert len(COMMITTED_STAGES) == 8
 
 
 def test_second_run_skips_everything(spark, cfg, clips_df, pipeline_run):
@@ -57,8 +30,8 @@ def test_second_run_skips_everything(spark, cfg, clips_df, pipeline_run):
     clusters2 = pipe2.run(clips_df)
     assert pipe2.executed_stages == []
     assert set(pipe2.skipped_stages) == set(first.executed_stages)
-    # a no-op resume must not re-write ANY table (incl. the dropped_buckets
-    # side output of the passthrough minhash builder)
+    # a no-op resume must not re-write ANY table (incl. the dropped_*
+    # side outputs)
     assert len(io.snapshots()) == n_snaps_before
     a = clusters1.toPandas().sort_values("clip_id").reset_index(drop=True)
     b = clusters2.toPandas().sort_values("clip_id").reset_index(drop=True)

@@ -65,14 +65,12 @@ def test_text_candidates_exact(pipeline_run, corpus):
     io, _, _ = pipeline_run
     _, _, oracle = corpus
     from locality_sensitive_hashing_spark.operators.candidates import (
-        decode_detector_mask,
+        decode_mask_col,
     )
 
-    # round 6: the stage commits the raw detector bitmask; the read-back
-    # decode is the same pure mapping the pipeline applies
-    got = decode_detector_mask(
-        io.read("candidates"), ["minhash", "simhash", "sa"]
-    ).toPandas()
+    # the stage commits the raw detector bitmask; the read-back decode is
+    # the same pure mapping the pipeline applies
+    got = decode_mask_col(io.read("candidates")).toPandas()
     assert _pair_set(got) == _pair_set(oracle.candidates)
     gd = {(r.id1, r.id2): list(r.detectors) for r in got.itertuples()}
     od = {(r.id1, r.id2): list(r.detectors) for r in oracle.candidates.itertuples()}
